@@ -699,26 +699,20 @@ def jaccard_verify_pairs(
 
 
 def jaccard_verify_pairs_sets(
-    cand: DataFrame, sh: DataFrame, min_j_e6: int = 200_000
+    cand: DataFrame, gd: DataFrame, min_j_e6: int = 200_000
 ) -> DataFrame:
     """Exact Jaccard verify over per-doc shingle-SET arrays: shared =
     size(array_intersect(set_a, set_b)), sizes read off the arrays —
     row-identical to ``jaccard_verify_pairs`` (verified on all 256
-    sf0.1 / 226,828 sf1 pairs) but a different physical trade: one
-    collect_list agg + two pair-keyed joins carrying arrays, instead of
-    exploding candidates x shingles/doc through two shuffles plus a
-    pair groupBy plus two size joins. Wins once the exploded row volume
-    dominates (~20% at the 10x sf1 corpus), loses at small corpora
-    where the extra agg exchange outweighs it — callers pick by scale
-    (see jaccard_pairs_pruned). ``sh`` must be DISTINCT per (doc_id,
-    shingle): array_intersect dedups, so set semantics require it.
-    ``sh`` may also be a (doc_id, grams) gram-ARRAY frame
-    (distinct_gram_docs) — the per-doc sets are then read directly off
-    the column and the collect_list exchange disappears (r6b)."""
-    if "grams" in sh.columns:
-        sets = sh.select("doc_id", F.col("grams").alias("_shs"))
-    else:
-        sets = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("_shs"))
+    sf0.1 / 226,828 sf1 pairs) but a different physical trade: two
+    pair-keyed joins carrying arrays, instead of exploding candidates x
+    shingles/doc through two shuffles plus a pair groupBy plus two size
+    joins. Wins once the exploded row volume dominates (~20% at the 10x
+    sf1 corpus), loses at small corpora — callers pick by scale (see
+    jaccard_pairs_pruned). ``gd`` is the (doc_id, grams) gram-array
+    frame of ``distinct_gram_docs``: the per-doc sets are read directly
+    off its distinct ``grams`` column."""
+    sets = gd.select("doc_id", F.col("grams").alias("_shs"))
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("_shs").alias("_sha"))
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("_shs").alias("_shb"))
     j = (

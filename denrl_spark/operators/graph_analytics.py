@@ -1,14 +1,31 @@
 """Graph analytics over the canonicalized KG edge table (stage-6 output
-of ``graph.materialize_graph``): degree centrality, 2-hop reachability,
-triangle enumeration, connected components, resource-allocation link
-prediction, and fixed-iteration PageRank (float reference, exact
-integer fixed-point, and personalized variants).
+of ``graph.materialize_graph``): degrees, 2-hop reachability,
+triangles, components, link prediction, PageRank (float reference and
+exact integer fixed-point), HITS, Katz, BFS / closeness / SSSP,
+k-core / k-truss / coreness, label propagation, SCC, random walks and
+stress centrality.
 
 The reference stops at materializing the triple/edge tables
 (run_jointmodel.py:1619-1688 writes triples; no downstream analytics),
 but a KG-construction engine's consumers immediately ask these
 questions of the graph, so they ship as first-class operators with the
 same oracle discipline as the extraction stages.
+
+Iteration: every iterative algorithm is one relational ``step`` per
+round handed to ``_fixpoint``, the single driver loop. Rounds are lazy
+plans driven from the Python driver; the driver eagerly
+``localCheckpoint``-s each round's state, which truncates lineage so
+the plan of round k stays O(1) instead of compounding (the classic
+iterative-Spark failure mode) and gives the next round exact stats. A
+loop runs either a FIXED number of rounds (the SQL twin unrolls the
+identical recurrence, so outputs match converged or not) or until a
+convergence predicate holds: ``_settled`` compares a (row count, sum)
+fingerprint between rounds (one small aggregate action per round),
+``_unchanged`` counts rows whose label moved. A converging loop that
+runs out of budget raises instead of returning a partial fixpoint. The
+constant per-round operands — the symmetric adjacency ``_adjacency``
+and the vertex set ``_vertices`` — are built by shared helpers and
+materialized once by the caller.
 
 Scale notes (edge table = E rows, vertex table = V rows, E >> V):
 
@@ -26,13 +43,10 @@ Scale notes (edge table = E rows, vertex table = V rows, E >> V):
   halves the join input.
 - ``pagerank``: rank vector is V rows, edges E rows. Each iteration is
   one join + one map-side-combined agg. The edge/out-degree frame is
-  computed once and REUSED across iterations (cached by the caller or
-  naturally re-read from the materialized edge table); ranks stay
-  small enough to broadcast for most real graphs (V ~ 1e8 canonical
-  entities => a few GB — at that point AQE falls back to a shuffle
-  join co-partitioned with the bucketed edges). Iterations live in the
-  DRIVER as a Python loop over lazy plans with an eager checkpoint per
-  round — lineage would otherwise grow exponentially.
+  computed once and REUSED across iterations; ranks stay small enough
+  to broadcast for most real graphs (V ~ 1e8 canonical entities => a
+  few GB — at that point AQE falls back to a shuffle join
+  co-partitioned with the bucketed edges).
 """
 
 from __future__ import annotations
@@ -40,6 +54,119 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 PR_DAMPING = 0.85
+
+
+def _fixpoint(state: DataFrame, step, rounds: int, until=None,
+              what: str = "fixpoint") -> DataFrame:
+    """The one driver loop: ``state = step(state).localCheckpoint()``
+    for ``rounds`` rounds. With ``until(old, new)`` the loop returns the
+    first state for which it holds and raises when the budget runs out
+    first; without it exactly ``rounds`` rounds run. The caller decides
+    whether the initial state is materialized."""
+    for _ in range(rounds):
+        new = step(state).localCheckpoint()
+        if until is not None and until(state, new):
+            return new
+        state = new
+    if until is not None:
+        raise RuntimeError(f"{what} did not converge in {rounds} rounds")
+    return state
+
+
+def _settled(*sums: str, first: tuple | None = None):
+    """``until`` for monotone fixpoints: the state's (row count, sum of
+    each ``sums`` column) equals the previous round's. A min-distance
+    relaxation round either adds rows (count grows) or lowers a value
+    (sum shrinks at fixed count), and a growth-only collection only
+    adds rows, so an equal fingerprint means fixpoint. One aggregate
+    action per round; ``first`` is the initial state's fingerprint
+    when it is known statically, which saves that action."""
+    last = first
+
+    def fingerprint(df: DataFrame) -> tuple:
+        aggs = [F.coalesce(F.sum(c), F.lit(0)) for c in sums]
+        return tuple(int(x) for x in df.agg(F.count(F.lit(1)), *aggs).collect()[0])
+
+    def until(old: DataFrame, new: DataFrame) -> bool:
+        nonlocal last
+        prev = last if last is not None else fingerprint(old)
+        last = fingerprint(new)
+        return last == prev
+
+    return until
+
+
+def _unchanged(key: str, col: str):
+    """``until`` for label propagation: no ``key`` row's ``col`` differs
+    between the old and the new state (one count action per round)."""
+    return lambda old, new: (
+        new.alias("n").join(old.alias("o"), key)
+        .where(F.col(f"n.{col}") != F.col(f"o.{col}"))
+        .count() == 0
+    )
+
+
+def _vertices(e: DataFrame, a: str, b: str, name: str = "surface") -> DataFrame:
+    """The distinct endpoint set of edge frame ``e`` as one column."""
+    return (
+        e.select(F.col(a).alias(name))
+        .unionByName(e.select(F.col(b).alias(name)))
+        .distinct()
+    )
+
+
+def _adjacency(edges: DataFrame, src: str, dst: str,
+               weight: str | None = None) -> DataFrame:
+    """Symmetric adjacency (v, nbr) of the undirected canonical graph:
+    every distinct non-loop vertex pair in both directions. With
+    ``weight`` each pair also carries cost = SSSP_UNIT div weight,
+    parallel (multi-predicate) edges collapsed to their minimum cost."""
+    if weight is None:
+        und, cost = undirected_edges(edges, src, dst), []
+    else:
+        und = (
+            edges.select(
+                F.least(src, dst).alias("va"), F.greatest(src, dst).alias("vb"),
+                F.expr(f"{SSSP_UNIT} div {weight}").cast("bigint").alias("cost"),
+            )
+            .where(F.col("va") != F.col("vb"))
+            .groupBy("va", "vb")
+            .agg(F.min("cost").alias("cost"))
+        )
+        cost = ["cost"]
+    return und.select(
+        F.col("va").alias("v"), F.col("vb").alias("nbr"), *cost
+    ).unionByName(
+        und.select(F.col("vb").alias("v"), F.col("va").alias("nbr"), *cost)
+    )
+
+
+def _min_plus(adj: DataFrame, val: str, cost, keys: tuple = ()):
+    """One min-plus relaxation round over ``adj`` as a ``_fixpoint``
+    step: d'(k, t) = min(d(k, t), min over v->t of d(k, v) + cost),
+    keyed by ``keys`` + surface. BFS is cost 1, SSSP the edge cost."""
+    def step(dist: DataFrame) -> DataFrame:
+        hop = dist.join(adj, dist.surface == adj.v).select(
+            *keys, F.col("nbr").alias("surface"), (F.col(val) + cost).alias(val)
+        )
+        return (
+            dist.unionByName(hop)
+            .groupBy(*keys, "surface")
+            .agg(F.min(val).alias(val))
+        )
+
+    return step
+
+
+def _seeded(edges: DataFrame, seeds: list[str], val: str) -> DataFrame:
+    """Initial relaxation state: one (surface, val = 0) row per seed."""
+    return (
+        edges.sparkSession.createDataFrame(
+            [(s,) for s in sorted(set(seeds))], "surface string"
+        )
+        .withColumn(val, F.lit(0).cast("bigint"))
+        .localCheckpoint()
+    )
 
 
 def degrees(edges: DataFrame, src: str = "src_surface", dst: str = "dst_surface",
@@ -139,7 +266,7 @@ def components(edges: DataFrame, src: str = "src_surface",
     (surface, component) with component = min surface of the component
     (deterministic). Delegates to linking.connected_components — the
     same O(diameter) salted min-label propagation the entity-linking
-    stage uses, with its strict convergence guard. max_iter bounds the
+    stage uses, with its convergence guard. max_iter bounds the
     graph DIAMETER, not size: linking's star graphs converge in 2, but
     a general KG can carry long containment chains, so the default
     here is 40 (raise for pathological path graphs — the guard raises
@@ -149,11 +276,7 @@ def components(edges: DataFrame, src: str = "src_surface",
     und = undirected_edges(edges, src, dst).select(
         F.col("va").alias("src"), F.col("vb").alias("dst")
     )
-    nodes = (
-        edges.select(F.col(src).alias("node_id"))
-        .unionByName(edges.select(F.col(dst).alias("node_id")))
-        .distinct()
-    )
+    nodes = _vertices(edges, src, dst, "node_id")
     return connected_components(nodes, und, max_iter=max_iter).select(
         F.col("node_id").alias("surface"), "component"
     )
@@ -177,14 +300,12 @@ def link_prediction_ra(edges: DataFrame, src: str = "src_surface",
     neighbors), one left-anti join against the edge set to drop
     already-linked pairs, one map-side-combined agg."""
     und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    )  # (v, neighbor), both directions
-    deg = adj.groupBy(F.col("va").alias("w")).agg(
+    adj = _adjacency(edges, src, dst)
+    deg = adj.groupBy(F.col("v").alias("w")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    a = adj.select(F.col("vb").alias("w"), F.col("va").alias("u"))
-    b = adj.select(F.col("vb").alias("w"), F.col("va").alias("v"))
+    a = adj.select(F.col("nbr").alias("w"), F.col("v").alias("u"))
+    b = adj.select(F.col("nbr").alias("w"), "v")
     cand = (
         a.join(b, "w")
         .where(F.col("u") < F.col("v"))
@@ -213,12 +334,7 @@ def _pr_operands(edges: DataFrame, src: str, dst: str):
     returning."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.cache()
-    verts = (
-        e.select(F.col("src").alias("surface"))
-        .unionByName(e.select(F.col("dst").alias("surface")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _vertices(e, "src", "dst").localCheckpoint()
     n_v = verts.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     eo = e.join(outdeg, "src").localCheckpoint()
@@ -226,28 +342,31 @@ def _pr_operands(edges: DataFrame, src: str, dst: str):
     return verts, n_v, eo
 
 
+def _inflow(eo: DataFrame, ranks: DataFrame, contrib) -> DataFrame:
+    """The PageRank-family message pass: per vertex, the sum of
+    ``contrib`` (evaluated on ranks x out-edges) over its in-edges —
+    one equi-join + one map-side-combined agg."""
+    return (
+        eo.join(ranks, eo.src == ranks.surface)
+        .select(F.col("dst").alias("surface"), contrib.alias("c"))
+        .groupBy("surface")
+        .agg(F.sum("c").alias("inflow"))
+    )
+
+
 def _pr_iterate(verts: DataFrame, eo: DataFrame, ranks: DataFrame,
                 iters: int, contrib, update, rank_col: str) -> DataFrame:
-    """Shared iteration loop: per round one equi-join (ranks x
-    out-edges) + one map-side-combined agg + one left join back to the
-    vertex set, then an EAGER localCheckpoint so lineage stays O(1)
-    per round instead of compounding (the classic iterative-Spark
-    failure mode). ``contrib`` is the per-edge column sent to the
+    """PageRank rounds: ``_inflow`` then one left join back to the
+    vertex set. ``contrib`` is the per-edge column sent to the
     destination; ``update`` maps the summed ``inflow`` column to the
     new rank column."""
-    for _ in range(iters):
-        contribs = (
-            eo.join(ranks, eo.src == ranks.surface)
-            .select(F.col("dst").alias("surface"), contrib.alias("c"))
-            .groupBy("surface")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            verts.join(contribs, "surface", "left")
-            .select("surface", update.alias(rank_col))
-            .localCheckpoint()
-        )
-    return ranks
+    return _fixpoint(
+        ranks,
+        lambda r: verts.join(_inflow(eo, r, contrib), "surface", "left").select(
+            "surface", update.alias(rank_col)
+        ),
+        iters,
+    )
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = PR_DAMPING,
@@ -267,36 +386,6 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = PR_DAMPING,
         iters=iters,
         contrib=F.col("rank") / F.col("outdeg"),
         update=F.lit((1.0 - damping) / n_v)
-        + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-        rank_col="rank",
-    )
-
-
-def personalized_pagerank(edges: DataFrame, seeds: list[str], iters: int = 3,
-                          damping: float = PR_DAMPING,
-                          src: str = "src_surface",
-                          dst: str = "dst_surface") -> DataFrame:
-    """Personalized PageRank: the teleport vector is uniform over the
-    SEED set instead of all vertices — the KG-relevance primitive
-    ("entities related to these") behind recommendation and query
-    expansion. r0 = 1/|S| on seeds, 0 elsewhere;
-    r'(v) = (1-d)*teleport(v) + d * sum_in r(u)/outdeg(u); dangling
-    mass dropped as in ``pagerank``. The seed set rides a literal
-    predicate — it is a user query, not data."""
-    if not seeds:
-        raise ValueError("personalized_pagerank needs a non-empty seed set")
-    verts, n_v, eo = _pr_operands(edges, src, dst)
-    if n_v == 0:
-        return verts.withColumn("rank", F.lit(0.0))
-    teleport = F.when(
-        F.col("surface").isin(list(seeds)), F.lit(1.0 / len(seeds))
-    ).otherwise(F.lit(0.0))
-    return _pr_iterate(
-        verts, eo,
-        ranks=verts.withColumn("rank", teleport),
-        iters=iters,
-        contrib=F.col("rank") / F.col("outdeg"),
-        update=F.lit(1.0 - damping) * teleport
         + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
         rank_col="rank",
     )
@@ -353,50 +442,41 @@ def hits_scores(edges: DataFrame, rounds: int = 2,
     Δ ~ 5*10^4 on a 10^6-vertex graph; past that, raise to
     decimal(38,0) sums before widening rounds.
 
-    Shape per round: two equi-joins (edges x scores) each feeding a
-    map-side-combined sum agg, plus a left join back to the
-    checkpointed vertex set — no global sort, no SinglePartition; the
-    same O(1)-lineage eager-checkpoint loop as PageRank/BFS/SSSP.
-    Vertices with no in-edges (resp. out-edges) get authority (resp.
-    hub) 0, matching the recurrence over an empty sum."""
+    Shape per round: two half-steps over one (surface, hub_u, auth_u)
+    state, each an equi-join (edges x state) feeding a map-side-combined
+    sum agg plus a left join back to the state, each materialized — no
+    global sort, no SinglePartition. Vertices with no in-edges (resp.
+    out-edges) get authority (resp. hub) 0, matching the recurrence
+    over an empty sum."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("surface"))
-        .unionByName(e.select(F.col("dst").alias("surface")))
-        .distinct()
-        .localCheckpoint()
+
+    def spread(s: DataFrame, frm: str, to: str, val: str, out: str) -> DataFrame:
+        # replace ``out`` by the sum of ``val`` over the edges frm -> to
+        x = (
+            e.join(s, e[frm] == s.surface)
+            .groupBy(F.col(to).alias("surface"))
+            .agg(F.sum(val).cast("bigint").alias("x"))
+        )
+        return (
+            s.join(x, "surface", "left")
+            .withColumn(out, F.coalesce("x", F.lit(0)).cast("bigint"))
+            .select("surface", "hub_u", "auth_u")
+        )
+
+    state = _vertices(e, "src", "dst").localCheckpoint().select(
+        "surface",
+        F.lit(1).cast("bigint").alias("hub_u"),
+        F.lit(0).cast("bigint").alias("auth_u"),
     )
-    hub = verts.withColumn("hub_u", F.lit(1).cast("bigint"))
-    auth = verts.withColumn("auth_u", F.lit(0).cast("bigint"))
-    for _ in range(rounds):
-        a_raw = (
-            e.join(hub, e.src == hub.surface)
-            .groupBy(F.col("dst").alias("surface"))
-            .agg(F.sum("hub_u").cast("bigint").alias("a"))
-        )
-        auth = (
-            verts.join(a_raw, "surface", "left")
-            .select(
-                "surface",
-                F.coalesce("a", F.lit(0)).cast("bigint").alias("auth_u"),
-            )
-            .localCheckpoint()
-        )
-        h_raw = (
-            e.join(auth, e.dst == auth.surface)
-            .groupBy(F.col("src").alias("surface"))
-            .agg(F.sum("auth_u").cast("bigint").alias("h"))
-        )
-        hub = (
-            verts.join(h_raw, "surface", "left")
-            .select(
-                "surface",
-                F.coalesce("h", F.lit(0)).cast("bigint").alias("hub_u"),
-            )
-            .localCheckpoint()
-        )
-    return hub.join(auth, "surface").select("surface", "hub_u", "auth_u")
+    return _fixpoint(
+        state,
+        lambda s: spread(
+            spread(s, "src", "dst", "hub_u", "auth_u").localCheckpoint(),
+            "dst", "src", "auth_u", "hub_u",
+        ),
+        rounds,
+    )
 
 
 JACCARD_UNIT = 10**6  # neighborhood-Jaccard fixed-point unit (1e-6)
@@ -422,15 +502,10 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src_surface",
     similarity is ~0 anyway) — then one map-side-combined agg and a
     broadcast-sized degree join. No cartesian anywhere: pairs with
     zero common neighbors never materialize."""
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    )  # (v, neighbor), both directions, distinct by construction
-    deg = adj.groupBy(F.col("va").alias("v")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    a = adj.select(F.col("vb").alias("w"), F.col("va").alias("u"))
-    b = adj.select(F.col("vb").alias("w"), F.col("va").alias("v"))
+    adj = _adjacency(edges, src, dst)  # distinct by construction
+    deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+    a = adj.select(F.col("nbr").alias("w"), F.col("v").alias("u"))
+    b = adj.select(F.col("nbr").alias("w"), "v")
     common = (
         a.join(b, "w")
         .where(F.col("u") < F.col("v"))
@@ -463,62 +538,23 @@ def bfs_distances(edges: DataFrame, seeds: list[str],
 
     Shape: frontier-free min-distance label propagation — each round
     joins the CURRENT distance table to the adjacency on the vertex
-    key and takes the per-vertex min of (old, neighbor+1). Rounds are
-    driver-looped over lazy plans with an eager localCheckpoint per
-    round (O(1) lineage — same discipline as pagerank/components), and
-    the loop EXITS EARLY when a round adds no vertices and lowers no
-    distance (converged min distances are unique, so fixpoint output
-    is engine-independent). Per round: one shuffle of the dist table
-    (V rows) + one of the adjacency join. max_iter bounds the graph
-    DIAMETER; the guard raises loudly on non-convergence rather than
-    returning partial distances."""
+    key and takes the per-vertex min of (old, neighbor+1): the
+    ``_min_plus`` step of ``closeness`` without the root key. The loop
+    EXITS EARLY when a round adds no vertices and lowers no distance
+    (converged min distances are unique, so fixpoint output is
+    engine-independent); the initial fingerprint is known statically
+    (|seeds| rows, all dist 0), so it costs no action. Per round: one
+    shuffle of the dist table (V rows) + one of the adjacency join.
+    max_iter bounds the graph DIAMETER; the guard raises loudly on
+    non-convergence rather than returning partial distances."""
     if not seeds:
         raise ValueError("bfs_distances: empty seed list")
-    spark = edges.sparkSession
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-    adj = adj.localCheckpoint()  # reused every round: materialize once
-    dist = (
-        spark.createDataFrame([(s,) for s in sorted(set(seeds))], "surface string")
-        .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint()
+    adj = _adjacency(edges, src, dst).localCheckpoint()
+    return _fixpoint(
+        _seeded(edges, seeds, "dist"), _min_plus(adj, "dist", 1), max_iter,
+        until=_settled("dist", first=(len(set(seeds)), 0)),
+        what="bfs_distances",
     )
-    # initial fingerprint is known statically: |seeds| rows, all dist 0
-    prev_n, prev_sum = len(set(seeds)), 0
-    for _ in range(max_iter):
-        hop = (
-            dist.join(adj, dist.surface == adj.v)
-            .select(F.col("nbr").alias("surface"),
-                    (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(hop)
-            .groupBy("surface")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        n, s = _dist_fingerprint(dist)
-        if (n, s) == (prev_n, prev_sum):
-            return dist
-        prev_n, prev_sum = n, s
-    raise RuntimeError(
-        f"bfs_distances did not converge in {max_iter} rounds "
-        "(graph diameter exceeds max_iter)"
-    )
-
-
-def _dist_fingerprint(dist: DataFrame) -> tuple[int, int]:
-    """(row count, sum of distances) — a strictly-decreasing-under-
-    improvement pair: a BFS round either adds a vertex (count grows)
-    or lowers a min distance (sum shrinks at fixed count), so equality
-    means fixpoint. One tiny aggregate action per round."""
-    row = dist.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dist"), F.lit(0)).alias("s"),
-    ).collect()[0]
-    return int(row["n"]), int(row["s"])
 
 
 CLOSENESS_UNIT = 10**6  # harmonic-centrality fixed-point unit (1e-6)
@@ -540,11 +576,10 @@ def closeness(edges: DataFrame, src: str = "src_surface",
     Shape: MULTI-SOURCE BFS with the root carried as a key column —
     one distance table keyed (root, surface) instead of one BFS per
     root, so all roots advance in the same joins (the MS-BFS batching
-    idea). Rounds are driver-looped lazy plans with an eager
-    localCheckpoint per round and early exit at fixpoint; per round:
-    one equi-join of the dist table to the adjacency + one
-    map-side-combinable min agg. Converged min distances are unique,
-    so fixpoint output is engine-independent.
+    idea). Rounds exit early at fixpoint; per round: one equi-join of
+    the dist table to the adjacency + one map-side-combinable min agg.
+    Converged min distances are unique, so fixpoint output is
+    engine-independent.
 
     Scale: state is O(sum of component sizes over roots) = O(V^2) for
     all-pairs on one giant component — at production scale pass a
@@ -554,16 +589,11 @@ def closeness(edges: DataFrame, src: str = "src_surface",
     per-component setting. The check-scale contract query samples
     every vertex of the (small) canonical graph.
     """
-    spark = edges.sparkSession
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-    adj = adj.localCheckpoint()
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     verts = (
         adj.select(F.col("v").alias("surface")).distinct()
         if roots is None
-        else spark.createDataFrame(
+        else edges.sparkSession.createDataFrame(
             [(r,) for r in sorted(set(roots))], "surface string"
         )
     )
@@ -574,28 +604,10 @@ def closeness(edges: DataFrame, src: str = "src_surface",
             F.lit(0).cast("bigint").alias("dist"),
         ).localCheckpoint()
     )
-    prev = _roots_fingerprint(dist)
-    for _ in range(max_iter):
-        hop = (
-            dist.join(adj, dist.surface == adj.v)
-            .select("root", F.col("nbr").alias("surface"),
-                    (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(hop)
-            .groupBy("root", "surface")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        cur = _roots_fingerprint(dist)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"closeness did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter)"
-        )
+    dist = _fixpoint(
+        dist, _min_plus(adj, "dist", 1, keys=("root",)), max_iter,
+        until=_settled("dist"), what="closeness",
+    )
     return (
         dist.groupBy(F.col("root").alias("surface"))
         .agg(
@@ -610,16 +622,6 @@ def closeness(edges: DataFrame, src: str = "src_surface",
             F.max("dist").cast("bigint").alias("ecc"),
         )
     )
-
-
-def _roots_fingerprint(dist: DataFrame) -> tuple[int, int]:
-    """(row count, total distance) over the root-keyed table — same
-    strictly-improving pair as _dist_fingerprint."""
-    row = dist.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dist"), F.lit(0)).alias("s"),
-    ).collect()[0]
-    return int(row["n"]), int(row["s"])
 
 
 def kcore(edges: DataFrame, k: int = 2, rounds: int = 6,
@@ -638,12 +640,11 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 6,
     no-ops). For a guaranteed-converged core at scale, raise
     ``rounds`` to the expected peel depth (real web KGs converge in a
     handful; each round is one degree agg + one semi-join, both
-    map-side-combinable, with an eager localCheckpoint keeping lineage
-    O(1))."""
+    map-side-combinable)."""
     if k < 1:
         raise ValueError("kcore: k must be >= 1")
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    for _ in range(rounds):
+
+    def peel(und: DataFrame) -> DataFrame:
         deg = (
             und.select(F.col("va").alias("v"))
             .unionByName(und.select(F.col("vb").alias("v")))
@@ -651,12 +652,15 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 6,
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.where(F.col("deg") >= k).select("v")
-        und = (
+        return (
             und.join(keep.withColumnRenamed("v", "va"), "va", "left_semi")
             .join(keep.withColumnRenamed("v", "vb"), "vb", "left_semi")
             .select("va", "vb")
-            .localCheckpoint()
         )
+
+    und = _fixpoint(
+        undirected_edges(edges, src, dst).localCheckpoint(), peel, rounds
+    )
     return (
         und.select(F.col("va").alias("surface"))
         .unionByName(und.select(F.col("vb").alias("surface")))
@@ -689,49 +693,20 @@ def sssp(edges: DataFrame, seeds: list[str], rounds: int = 8,
     exact integers (integer division, integer sums): no float-sum
     ordering hazard.
 
-    Shape per round: one join of the V-row distance table to the
-    adjacency + one min-combined agg; eager localCheckpoint keeps
-    lineage O(1); the weighted adjacency operand is materialized once
-    and reused every round."""
+    Shape per round: the ``_min_plus`` step of ``bfs_distances`` with
+    the edge cost instead of 1 — one join of the V-row distance table
+    to the weighted adjacency (materialized once) + one min-combined
+    agg."""
     if not seeds:
         raise ValueError("sssp: empty seed list")
     if rounds < 1:
         raise ValueError("sssp: rounds must be >= 1")
-    spark = edges.sparkSession
-    cost = F.expr(f"{SSSP_UNIT} div {weight}")
-    uw = (
-        edges.select(
-            F.least(src, dst).alias("va"), F.greatest(src, dst).alias("vb"),
-            cost.cast("bigint").alias("cost"),
-        )
-        .where(F.col("va") != F.col("vb"))
-        .groupBy("va", "vb")
-        .agg(F.min("cost").alias("cost"))
+    adj = _adjacency(edges, src, dst, weight).localCheckpoint()
+    return _fixpoint(
+        _seeded(edges, seeds, "cost_u"),
+        _min_plus(adj, "cost_u", F.col("cost")),
+        rounds,
     )
-    adj = uw.unionByName(
-        uw.select(
-            F.col("vb").alias("va"), F.col("va").alias("vb"), "cost"
-        )
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"), "cost")
-    adj = adj.localCheckpoint()
-    dist = (
-        spark.createDataFrame([(s,) for s in sorted(set(seeds))], "surface string")
-        .withColumn("cost_u", F.lit(0).cast("bigint"))
-        .localCheckpoint()
-    )
-    for _ in range(rounds):
-        relax = (
-            dist.join(adj, dist.surface == adj.v)
-            .select(F.col("nbr").alias("surface"),
-                    (F.col("cost_u") + F.col("cost")).alias("cost_u"))
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("surface")
-            .agg(F.min("cost_u").alias("cost_u"))
-            .localCheckpoint()
-        )
-    return dist
 
 
 def ktruss(edges: DataFrame, k: int = 3, rounds: int = 3,
@@ -753,8 +728,7 @@ def ktruss(edges: DataFrame, k: int = 3, rounds: int = 3,
     equi-joins over the oriented edge set — the standard O(E^1.5)
     triangle pass, AQE splitting hot middle vertices) + one per-edge
     support aggregate (each triangle charges its three edges via one
-    explode, map-side combined) + one semi-join filter; eager
-    localCheckpoint per round keeps lineage O(1)."""
+    explode, map-side combined) + one semi-join filter."""
     if k < 3:
         raise ValueError("ktruss: k must be >= 3")
     und = undirected_edges(edges, src, dst).localCheckpoint()
@@ -777,10 +751,14 @@ def ktruss(edges: DataFrame, k: int = 3, rounds: int = 3,
             F.count(F.lit(1)).cast("bigint").alias("support")
         )
 
-    for _ in range(rounds):
-        sup = support(und)
-        keep = sup.where(F.col("support") >= k - 2).select("va", "vb")
-        und = und.join(keep, ["va", "vb"], "left_semi").localCheckpoint()
+    und = _fixpoint(
+        und,
+        lambda u: u.join(
+            support(u).where(F.col("support") >= k - 2).select("va", "vb"),
+            ["va", "vb"], "left_semi",
+        ),
+        rounds,
+    )
     # LEFT join + coalesce: an edge can pass the last round's filter
     # (support >= k-2 in the round INPUT) yet end with zero triangles
     # in the final edge set once its co-members peel — it is still a
@@ -822,24 +800,21 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS,
     Shape per round: one equi-join of the V-row label table to the
     adjacency on the vertex key (AQE splits hot vertices) + one
     map-side-combined (v, label) count + one per-VERTEX window
-    row_number (partitioned by v — never a global sort); eager
-    localCheckpoint keeps lineage O(1); the adjacency operand is
-    materialized once and reused every round. Every vertex of the edge
-    table has >= 1 neighbor, so no vertex ever drops out."""
+    row_number (partitioned by v — never a global sort); the adjacency
+    operand is materialized once and reused every round. Every vertex
+    of the edge table has >= 1 neighbor, so no vertex ever drops
+    out."""
     from pyspark.sql import Window
 
     if rounds < 1:
         raise ValueError("label_propagation: rounds must be >= 1")
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-    adj = adj.localCheckpoint()
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     labels = (
         adj.select("v").distinct().withColumn("label", F.col("v")).localCheckpoint()
     )
     w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(rounds):
+
+    def adopt(labels: DataFrame) -> DataFrame:
         cnt = (
             adj.join(
                 labels.select(F.col("v").alias("nbr"), "label"), "nbr"
@@ -847,12 +822,13 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS,
             .groupBy("v", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             cnt.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("v", "label")
-            .localCheckpoint()
         )
+
+    labels = _fixpoint(labels, adopt, rounds)
     return labels.select(F.col("v").alias("surface"), F.col("label").alias("community"))
 
 
@@ -925,16 +901,13 @@ def random_walks(edges: DataFrame, walk_len: int = 8,
     skew); at true web scale the standard move is capping the stored
     neighbor list per node (uniform hash-sample of the adjacency),
     which changes the walk distribution the same bounded way the LSH
-    bucket cap changes recall — documented, not silent. Driver-looped
-    lazy plans with per-round localCheckpoint (O(1) lineage, same
-    discipline as pagerank/bfs)."""
-    und = undirected_edges(edges, src, dst)
+    bucket cap changes recall — documented, not silent. Each step's
+    frontier is checkpointed like a ``_fixpoint`` round, but the walk
+    keeps every step's frontier, so it runs its own loop."""
     adj = (
-        und.unionByName(
-            und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-        )
-        .groupBy(F.col("va").alias("node"))
-        .agg(F.array_sort(F.collect_set("vb")).alias("nbrs"))
+        _adjacency(edges, src, dst)
+        .groupBy(F.col("v").alias("node"))
+        .agg(F.array_sort(F.collect_set("nbr")).alias("nbrs"))
         .localCheckpoint()
     )
     cur = adj.select(F.col("node").alias("start"), F.col("node").alias("cur"))
@@ -1004,12 +977,12 @@ def scc(edges: DataFrame, src: str = "src_surface", dst: str = "dst_surface",
     3. peel the collected SCCs off and repeat on the remainder.
 
     Every step is an equi-join + map-side-combinable agg over (V + E)
-    rows; rounds are driver-looped over lazy plans with an eager
-    localCheckpoint per round (O(1) lineage, the pagerank/bfs
-    discipline) and exact changed-row / growth counts as convergence
-    fingerprints; ``_BATCH_STEPS`` propagation pushes are fused per
-    materialization, so the blocking-action count (the dominant cost
-    of a driver loop on small graphs) is diameter/3, not diameter.
+    rows; both inner fixpoints run on ``_fixpoint`` with exact
+    convergence checks (changed colors, collected-row growth), and
+    each round fuses ``_BATCH_STEPS`` propagation pushes, so the
+    blocking-action count (the dominant cost of a driver loop on small
+    graphs) is diameter/3, not diameter — no change across a whole
+    batch still implies fixpoint, because propagation is monotone.
     ``max_iter`` bounds the BATCHED rounds per inner fixpoint (i.e. a
     diameter of max_iter * _BATCH_STEPS); ``max_outer`` bounds the
     peeling depth (worst case: a
@@ -1024,88 +997,47 @@ def scc(edges: DataFrame, src: str = "src_surface", dst: str = "dst_surface",
         .distinct()
         .localCheckpoint()
     )
-    verts = (
-        e0.select(F.col("s").alias("v"))
-        .unionByName(e0.select(F.col("d").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _vertices(e0, "s", "d", "v").localCheckpoint()
+
+    def push_colors(color: DataFrame) -> DataFrame:
+        for _ in range(_BATCH_STEPS):
+            pushed = color.join(e, color.v == e.s).select(F.col("d").alias("v"), "c")
+            color = color.unionByName(pushed).groupBy("v").agg(F.max("c").alias("c"))
+        return color
+
+    def collect(asg: DataFrame) -> DataFrame:
+        for _ in range(_BATCH_STEPS):
+            cand = (
+                e.join(asg.select(F.col("v").alias("d"), "scc_id"), "d")
+                .select(F.col("s").alias("v"), "scc_id")
+                .distinct()
+            )
+            asg = asg.unionByName(
+                cand.join(color, "v")
+                .where(F.col("scc_id") == F.col("c"))
+                .select("v", "scc_id")
+            ).distinct()
+        return asg
+
     e = e0
     done: DataFrame | None = None
     for _ in range(max_outer):
         if verts.limit(1).count() == 0:
             break
         # -- 1. forward max-label coloring to fixpoint ----------------
-        # BATCH_STEPS pushes per materialization: lineage stays O(1)
-        # per checkpoint while the blocking-action count (the driver-
-        # loop cost that dominates on small graphs) drops by the batch
-        # factor. The convergence check stays EXACT — no change across
-        # a whole batch implies fixpoint (propagation is monotone).
-        color = verts.withColumn("c", F.col("v")).localCheckpoint()
-        converged = False
-        for _i in range(max_iter):
-            new_color = color
-            for _s in range(_BATCH_STEPS):
-                pushed = (
-                    new_color.join(e, new_color.v == e.s)
-                    .select(F.col("d").alias("v"), "c")
-                )
-                new_color = (
-                    new_color.unionByName(pushed)
-                    .groupBy("v")
-                    .agg(F.max("c").alias("c"))
-                )
-            new_color = new_color.localCheckpoint()
-            n_changed = (
-                new_color.alias("n")
-                .join(color.alias("o"), "v")
-                .where(F.col("n.c") != F.col("o.c"))
-                .count()
-            )
-            color = new_color
-            if n_changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"scc: coloring did not converge in {max_iter} rounds "
-                "(graph diameter exceeds max_iter)"
-            )
+        color = _fixpoint(
+            verts.withColumn("c", F.col("v")).localCheckpoint(),
+            push_colors, max_iter,
+            until=_unchanged("v", "c"), what="scc coloring",
+        )
         # -- 2. backward collection within color classes --------------
-        asg = (
+        asg = _fixpoint(
             color.where(F.col("c") == F.col("v"))
             .select("v", F.col("c").alias("scc_id"))
-            .localCheckpoint()
+            .localCheckpoint(),
+            collect, max_iter,
+            until=_settled(), what="scc collection",
         )
-        prev_n = asg.count()
-        converged = False
-        for _i in range(max_iter):
-            new_asg = asg
-            for _s in range(_BATCH_STEPS):
-                cand = (
-                    e.join(new_asg.select(F.col("v").alias("d"), "scc_id"), "d")
-                    .select(F.col("s").alias("v"), "scc_id")
-                    .distinct()
-                )
-                new_asg = (
-                    new_asg.unionByName(
-                        cand.join(color, "v")
-                        .where(F.col("scc_id") == F.col("c"))
-                        .select("v", "scc_id")
-                    )
-                    .distinct()
-                )
-            new_asg = new_asg.localCheckpoint()
-            n = new_asg.count()
-            asg = new_asg
-            if n == prev_n:
-                converged = True
-                break
-            prev_n = n
-        if not converged:
-            raise RuntimeError(
-                f"scc: collection did not converge in {max_iter} rounds"
-            )
         done = asg if done is None else done.unionByName(asg).localCheckpoint()
         # -- 3. peel ---------------------------------------------------
         verts = verts.join(asg, "v", "left_anti").localCheckpoint()
@@ -1279,35 +1211,26 @@ def katz_scores(edges: DataFrame, rounds: int = 3,
     untruncated series to converge; the fixed-round truncation here is
     finite for any alpha, and matches the unrolled SQL twin exactly.
 
-    Shape: rounds x (one equi-join + one map-side-combined agg + one
-    left join back to verts), per-round eager localCheckpoint = O(1)
-    lineage — same loop scaling as kg_pagerank (the running katz total
-    rides the rank frame, no extra pass)."""
+    Shape: rounds x (``_inflow`` — one equi-join + one
+    map-side-combined agg — + one left join back to the state): the
+    PageRank round with the running katz total riding the state frame,
+    no extra pass."""
     verts, n_v, eo = _pr_operands(edges, src, dst)
     state = verts.select(
         "surface",
         F.lit(KATZ_UNIT).cast("bigint").alias("x_u"),
         F.lit(0).cast("bigint").alias("katz_u"),
     ).localCheckpoint()
-    for _ in range(rounds):
-        contribs = (
-            eo.join(state, eo.src == state.surface)
-            .select(F.col("dst").alias("surface"), F.col("x_u").alias("c"))
-            .groupBy("surface")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        state = (
-            state.join(contribs, "surface", "left")
-            .select(
-                "surface",
-                F.expr(f"coalesce(inflow, 0L) div {alpha_den}")
-                .cast("bigint").alias("x_u"),
-                (F.col("katz_u")
-                 + F.expr(f"coalesce(inflow, 0L) div {alpha_den}"))
-                .cast("bigint").alias("katz_u"),
-            )
-            .localCheckpoint()
-        )
+    x = F.expr(f"coalesce(inflow, 0L) div {alpha_den}")
+    state = _fixpoint(
+        state,
+        lambda s: s.join(_inflow(eo, s, F.col("x_u")), "surface", "left").select(
+            "surface",
+            x.cast("bigint").alias("x_u"),
+            (F.col("katz_u") + x).cast("bigint").alias("katz_u"),
+        ),
+        rounds,
+    )
     return state.select("surface", "katz_u")
 
 
@@ -1344,8 +1267,9 @@ def stress_scores(edges: DataFrame, n_roots: int = STRESS_ROOTS,
     Shape: forward = MS-BFS batched per level (all roots advance in
     the same equi-join + map-side-combined sigma sum; frontier
     anti-joins the visited set); backward = per level one equi-join
-    to the next level's phi + one sum. Every frame is eagerly
-    localCheckpoint-ed (O(1) lineage); state is O(levels * reached),
+    to the next level's phi + one sum. Every level frame is
+    checkpointed like a ``_fixpoint`` round, but both passes keep every
+    level, so they run their own loops; state is O(levels * reached),
     bounded by the root sample."""
     e = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
@@ -1353,12 +1277,7 @@ def stress_scores(edges: DataFrame, n_roots: int = STRESS_ROOTS,
         .distinct()
         .localCheckpoint()
     )
-    verts = (
-        e.select(F.col("s").alias("surface"))
-        .unionByName(e.select(F.col("t").alias("surface")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _vertices(e, "s", "t").localCheckpoint()
     roots = verts.orderBy("surface").limit(n_roots)
     level_frames = [
         roots.select(
@@ -1484,28 +1403,23 @@ def coreness(edges: DataFrame, rounds: int = 6,
     Shape per round: one adjacency equi-join carrying the |E|-sized
     (v, c_nbr) frame, one per-vertex window (partitionBy v — shuffles
     on the vertex key, never a global sort: h = max(min(rank, c)) over
-    neighbors ranked by c desc), one map-side-combined max agg; eager
-    localCheckpoint keeps lineage O(1). Skewed hubs are one key each —
+    neighbors ranked by c desc), one map-side-combined max agg. Skewed
+    hubs are one key each —
     AQE splits the straggler partition; the window state per key is
     the neighbor list it would take to compute any order statistic."""
     from pyspark.sql import Window
 
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    adj = (
-        und.select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-        .unionByName(und.select(F.col("vb").alias("v"), F.col("va").alias("nbr")))
-        .localCheckpoint()
-    )
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     c = adj.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     w = Window.partitionBy("v").orderBy(F.desc("cn"), F.asc("nbr"))
-    for _ in range(rounds):
-        j = (
+    c = _fixpoint(
+        c,
+        lambda c: (
             adj.join(c.select(F.col("v").alias("nbr"), F.col("c").alias("cn")), "nbr")
             .withColumn("rk", F.row_number().over(w))
-        )
-        c = (
-            j.groupBy("v")
+            .groupBy("v")
             .agg(F.max(F.least(F.col("rk").cast("bigint"), F.col("cn"))).alias("c"))
-            .localCheckpoint()
-        )
+        ),
+        rounds,
+    )
     return c.select(F.col("v").alias("surface"), F.col("c").cast("bigint").alias("coreness"))

@@ -14,16 +14,15 @@ Scale notes:
   (celebrity entities), and ``salt_buckets`` pre-salts the mention->
   normalized-form grouping, the classic power-law hotspot.
 - iterations are bounded (components of similarity graphs are shallow;
-  min-label propagation converges in O(diameter) rounds) and each round
-  is checkpoint-friendly (localCheckpoint truncates the lineage so plans
-  don't grow exponentially).
+  min-label propagation converges in O(diameter) rounds) and run on the
+  graph-analytics fixpoint driver (``graph_analytics._fixpoint``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from denrl_spark.operators.tagging import stable_id  # reuse content-hash ids
+from denrl_spark.operators.graph_analytics import _fixpoint, _unchanged
 
 
 def normalize_surface(col: F.Column) -> F.Column:
@@ -72,7 +71,7 @@ def mention_edges(mentions: DataFrame, salt_buckets: int = 8) -> DataFrame:
 
 
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 12, strict: bool = True
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 12
 ) -> DataFrame:
     """(node_id) x (src, dst) -> (node_id, component) via min-label
     propagation. Deterministic; component = min node_id in component.
@@ -80,8 +79,8 @@ def connected_components(
     Converges in O(diameter) rounds — surface-form graphs are stars
     (diameter <= 2 via the per-norm anchor in mention_edges), so
     ``max_iter`` is generous headroom for alias-edge chains. If the
-    fixpoint is NOT reached within max_iter, ``strict`` raises rather
-    than silently returning partially-merged components."""
+    fixpoint is NOT reached within max_iter it raises rather than
+    silently returning partially-merged components."""
     spark = nodes.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     labels = nodes.select(
@@ -90,35 +89,24 @@ def connected_components(
     und = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    changed = -1
-    for _ in range(max_iter):
+
+    def spread(labels: DataFrame) -> DataFrame:
         msgs = (
             und.join(labels, und.src == labels.node_id)
             .select(F.col("dst").alias("node_id"), "component")
         )
-        new_labels = (
+        return (
             labels.select("node_id", "component")
             .unionByName(msgs)
             .groupBy("node_id")
             .agg(F.min("component").alias("component"))
             .repartition(n_part, "node_id")
-            .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node_id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if strict and changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            f"({changed} labels still changing) — raise max_iter"
-        )
-    return labels
+
+    return _fixpoint(
+        labels, spread, max_iter,
+        until=_unchanged("node_id", "component"), what="connected_components",
+    )
 
 
 def canonicalize_surfaces(mentions: DataFrame) -> DataFrame:

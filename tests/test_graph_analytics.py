@@ -7,6 +7,7 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
+from denrl_spark.operators import graph_analytics as ga
 from denrl_spark.operators.graph_analytics import (
     degrees,
     pagerank,
@@ -202,37 +203,6 @@ def test_link_prediction_matches_bruteforce(edges):
     assert got == want and len(got) > 0
     # adjacent pairs never appear
     assert all(frozenset(k) not in und for k in got)
-
-
-def test_personalized_pagerank_matches_loop(edges):
-    from denrl_spark.operators.graph_analytics import personalized_pagerank
-
-    seeds, d = ["a", "e"], 0.85
-    got = {
-        r["surface"]: r["rank"]
-        for r in personalized_pagerank(edges, seeds, iters=3, damping=d).collect()
-    }
-    e = {(s, o) for s, _, o, _ in EDGES}
-    verts = sorted({v for pair in e for v in pair})
-    outdeg = {v: sum(1 for s, _ in e if s == v) for v in verts}
-    tele = {v: (1.0 / len(seeds) if v in seeds else 0.0) for v in verts}
-    rank = dict(tele)
-    for _ in range(3):
-        inflow = {v: 0.0 for v in verts}
-        for s, o in e:
-            inflow[o] += rank[s] / outdeg[s]
-        rank = {v: (1 - d) * tele[v] + d * inflow[v] for v in verts}
-    for v in verts:
-        assert got[v] == pytest.approx(rank[v], abs=1e-12)
-    # locality: a seed neighborhood outranks the far side of the graph
-    assert got["b"] > got["f"] or got["a"] > got["f"]
-
-
-def test_personalized_pagerank_empty_seeds_raises(edges):
-    from denrl_spark.operators.graph_analytics import personalized_pagerank
-
-    with pytest.raises(ValueError):
-        personalized_pagerank(edges, [])
 
 
 def test_partition_invariance(edges, spark):
@@ -799,6 +769,74 @@ def test_scc_exact_outer_budget_succeeds(spark):
     assert got == {("a", "a", 1), ("b", "b", 1), ("c", "c", 1)}
     with _pytest.raises(RuntimeError, match="peeling"):
         scc(g, max_outer=2)
+
+
+# a directed path f -> e -> d -> c -> b -> a (diameter 5), oriented so
+# that scc's forward MAX coloring has to travel its whole length too
+PATH = [("f", "e"), ("e", "d"), ("d", "c"), ("c", "b"), ("b", "a")]
+
+
+@pytest.mark.parametrize(
+    "what, run",
+    [
+        ("bfs_distances", lambda g: ga.bfs_distances(g, ["a"], max_iter=2)),
+        ("closeness", lambda g: ga.closeness(g, max_iter=2)),
+        ("connected_components", lambda g: ga.components(g, max_iter=2)),
+        # one scc round fuses 3 pushes, still short of the 5 hops
+        ("scc coloring", lambda g: ga.scc(g, max_iter=1)),
+    ],
+    ids=["bfs", "closeness", "components", "scc"],
+)
+def test_convergence_guard_raises_below_diameter(spark, what, run):
+    """Every converging loop raises, naming its operator, when its
+    round budget is below what the path graph's diameter needs — it
+    never returns a partial fixpoint."""
+    g = spark.createDataFrame(
+        [(s, "p", d, 1) for s, d in PATH],
+        "src_surface string, pred string, dst_surface string, n_obs long",
+    )
+    with pytest.raises(RuntimeError, match=f"^{what} did not converge in"):
+        run(g).count()
+
+
+# Spark jobs of one call plus one count() on the EDGES fixture, measured
+# before the iterative loops shared one driver. A change that adds an
+# action per round (an extra fingerprint, a stray count) fails here.
+MAX_JOBS = {
+    "pagerank_fixedpoint": 24,
+    "bfs_distances": 26,
+    "closeness": 30,
+    "scc": 63,
+    "connected_components": 29,
+}
+
+
+def test_driver_action_cost_pinned(spark, edges):
+    from denrl_spark.operators.linking import connected_components
+
+    sc = spark.sparkContext
+    edges.count()  # materialize the cached fixture outside the counts
+    nodes = ga._vertices(edges, "src_surface", "dst_surface", "node_id")
+    pairs = edges.select(
+        F.col("src_surface").alias("src"), F.col("dst_surface").alias("dst")
+    )
+    runs = {
+        "pagerank_fixedpoint": lambda: ga.pagerank_fixedpoint(edges),
+        "bfs_distances": lambda: ga.bfs_distances(edges, ["a"]),
+        "closeness": lambda: ga.closeness(edges),
+        "scc": lambda: ga.scc(edges),
+        "connected_components": lambda: connected_components(nodes, pairs),
+    }
+    got = {}
+    for name, run in runs.items():
+        group = f"job_cost_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            run().count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(got[n] <= MAX_JOBS[n] for n in MAX_JOBS), got
 
 
 def test_scc_adversarial_digraphs(spark):

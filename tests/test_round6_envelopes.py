@@ -68,8 +68,9 @@ def test_jaccard_verify_sets_equals_explode(spark):
     explode = sorted(
         map(tuple, textops.jaccard_verify_pairs(docs, cand, 200_000, sh=shd).collect())
     )
+    gd = textops.distinct_gram_docs(docs).localCheckpoint()
     sets = sorted(
-        map(tuple, textops.jaccard_verify_pairs_sets(cand, shd, 200_000).collect())
+        map(tuple, textops.jaccard_verify_pairs_sets(cand, gd, 200_000).collect())
     )
     assert explode == sets
     assert explode, "fixture produced no verified pairs"
